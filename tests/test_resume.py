@@ -35,6 +35,27 @@ def _table(spark, root) -> pd.DataFrame:
     )
 
 
+def _assert_counters_match_reread(spark, out, run_id):
+    """Each 'done' record of run ``run_id`` holds the totals an
+    independent re-read of its unit's output finds."""
+    from pyspark.sql import functions as F
+
+    recs = [r for r in Manifest(out).records()
+            if r.run_id == run_id and r.status == "done"]
+    assert recs
+    for rec in recs:
+        got = spark.read.parquet(f"{out}/{rec.unit}").agg(
+            F.count(F.lit(1)).alias("w"),
+            F.sum("count").alias("p"),
+            F.sum(
+                F.coalesce(F.length("val_gorilla"), F.lit(0))
+                + F.coalesce(F.length("ts_gorilla"), F.lit(0))
+            ).alias("b"),
+        ).first()
+        assert (rec.windows_out, rec.points, rec.bytes_compressed) == tuple(got), rec
+    return recs
+
+
 def test_resume_after_partial_run(spark, tmp_path):
     inp = str(tmp_path / "seq")
     _write_input(spark, inp, 400)
@@ -57,10 +78,11 @@ def test_resume_after_partial_run(spark, tmp_path):
 
 def test_manifest_lineage_and_metrics(spark, tmp_path):
     inp = str(tmp_path / "seq")
+    out = str(tmp_path / "out")
     _write_input(spark, inp, 200)
-    job = LadderJob(spark, inp, str(tmp_path / "out"), CFG)
-    job.run()
-    recs = Manifest(str(tmp_path / "out")).records()
+    job = LadderJob(spark, inp, out, CFG)
+    r1 = job.run()
+    recs = Manifest(out).records()
     assert recs
     snap = snapshot_id(inp)
     done = [r for r in recs if r.status == "done"]
@@ -72,6 +94,28 @@ def test_manifest_lineage_and_metrics(spark, tmp_path):
         assert rec.rollup_watermark.startswith("doc_")
         assert rec.rows_in > 0 and rec.windows_out > 0 and rec.points > 0
         assert rec.bytes_compressed > 0 and rec.wall_ms >= 0
+    first = {r.unit: r for r in _assert_counters_match_reread(spark, out, r1["run_id"])}
+
+    # 3 new docs: the snapshot moves, so every unit re-runs, and most
+    # units see an empty increment
+    new = gen_pandas(200, 203)
+    spark.createDataFrame(new).write.mode("append").parquet(inp)
+    r2 = job.run(incremental=True)
+    second = _assert_counters_match_reread(spark, out, r2["run_id"])
+    assert {r.unit for r in second} == set(first)
+    per_source = new.groupby("source").agg(n=("doc_id", "size"), hi=("doc_id", "max"))
+    for rec in second:
+        src = rec.unit.split("=", 1)[1]
+        # rows_in counts the increment, not the whole source
+        if src in per_source.index:
+            assert rec.rows_in == per_source.loc[src, "n"], rec
+            assert rec.rollup_watermark == per_source.loc[src, "hi"], rec
+            assert rec.points > first[rec.unit].points
+        else:
+            assert rec.rows_in == 0, rec
+            assert rec.rollup_watermark == first[rec.unit].rollup_watermark
+            assert rec.points == first[rec.unit].points
+    assert 0 < len(per_source) < len(second)
 
 
 def test_rerun_is_noop_until_snapshot_changes(spark, tmp_path):
@@ -135,12 +179,94 @@ def test_incremental_crash_between_write_and_manifest(spark, tmp_path):
 
     r = LadderJob(spark, inp, out, CFG).run(incremental=True)  # resume
     assert r["pending"] == 0
+    # the dangling unit is rebuilt by overwrite, the others append; the
+    # counters of both still equal the unit's totals
+    _assert_counters_match_reread(spark, out, r["run_id"])
 
     got = _table(spark, out)
     ref_job = LadderJob(spark, inp, str(tmp_path / "ref"), CFG)
     ref_job.run()
     want = _table(spark, str(tmp_path / "ref"))
     pd.testing.assert_frame_equal(got, want)
+
+
+def test_incremental_watermark_crosses_id_width(spark, tmp_path):
+    """Ids outgrow their zero padding at 10^8 documents: doc_100000000
+    must order after doc_99999999, both in the watermark a run records
+    and in the filter the next run applies."""
+    inp = str(tmp_path / "seq")
+    out = str(tmp_path / "out")
+    first = gen_pandas(99_999_990, 100_000_004)
+    spark.createDataFrame(first).write.parquet(inp)
+    LadderJob(spark, inp, out, CFG).run(incremental=True)
+    hi = first.groupby("source")["doc_id"].agg(
+        lambda ids: max(ids, key=lambda d: (len(d), d))
+    )
+    wm = {r.unit: r.rollup_watermark for r in Manifest(out).records()
+          if r.status == "done"}
+    assert wm == {f"source={s}": d for s, d in hi.items()}
+    assert any(len(d) == len("doc_100000000") for d in wm.values())
+
+    spark.createDataFrame(gen_pandas(100_000_004, 100_000_016)).write.mode(
+        "append"
+    ).parquet(inp)
+    LadderJob(spark, inp, out, CFG).run(incremental=True)
+
+    ref = str(tmp_path / "ref")
+    LadderJob(spark, inp, ref, CFG).run()
+    pd.testing.assert_frame_equal(_table(spark, out), _table(spark, ref))
+
+
+def test_increment_filter_keeps_doc_id_pushdown(spark, tmp_path):
+    """While no doc_id outgrows the watermark's width, the increment
+    filter carries ``doc_id > wm`` as a pushed parquet filter, so an
+    append skips the row groups of old ids."""
+    from time2feat_spark.plans.ladder_job import _past
+
+    inp = str(tmp_path / "seq")
+    _write_input(spark, inp, 20)
+    df = spark.read.parquet(inp)
+
+    def pushed(widest):
+        plan = df.where(_past("doc_00000009", widest))._jdf.queryExecution()
+        return plan.executedPlan().toString().split("PushedFilters")[1][:300]
+
+    assert "GreaterThan(doc_id,doc_00000009)" in pushed(12)
+    assert "doc_00000009" not in pushed(13)  # crossing the width: no prune
+    assert sorted(r.doc_id for r in df.where(_past("doc_00000009", 12)).collect()) == [
+        f"doc_{i:08d}" for i in range(10, 20)
+    ]
+
+
+def test_tier_conservation_mismatch_is_loud(spark, tmp_path, monkeypatch):
+    """A tier that lost windows fails the run before the unit's 'done'
+    record lands; the 'started' tombstone stays, so the next run
+    rebuilds the unit by overwrite."""
+    from pyspark.sql import functions as F
+
+    from time2feat_spark.plans import ladder_job
+
+    inp = str(tmp_path / "seq")
+    out = str(tmp_path / "out")
+    _write_input(spark, inp, 60)
+    orig = ladder_job.assemble
+
+    def lossy_assemble(flat, cfg=None):
+        # drop the 1h windows of about half the documents
+        keep = (F.col("tier") != "1h") | (F.pmod(F.xxhash64("doc_id"), F.lit(2)) == 0)
+        return orig(flat, cfg).where(keep)
+
+    monkeypatch.setattr(ladder_job, "assemble", lossy_assemble)
+    with pytest.raises(RuntimeError, match="not conserved"):
+        LadderJob(spark, inp, out, CFG).run()
+    recs = Manifest(out).records()
+    assert [r.status for r in recs] == ["started"]
+    assert Manifest(out).dangling_units() == {recs[0].unit}
+
+    monkeypatch.setattr(ladder_job, "assemble", orig)
+    r = LadderJob(spark, inp, out, CFG).run(incremental=True)
+    assert recs[0].unit in r["processed"] and r["pending"] == 0
+    _assert_counters_match_reread(spark, out, r["run_id"])
 
 
 def test_salted_write_spreads_hot_source(spark, tmp_path):

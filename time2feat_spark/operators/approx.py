@@ -297,20 +297,25 @@ def hll_tier_rollup(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Distinct-count continuous aggregate: per-window HLL registers at
-    every tier, where each coarser tier is built by MERGING the finest
-    tier's registers (groupBy + max) — the sketch-cascade posture of
-    `operators/sketch_rollup.py` applied to cardinality. Raw data is
-    touched exactly once (the caller produces the finest-tier registers
-    with `hll_partial` over `floor(ts / finest)` windows); every coarser
-    tier costs O(finer windows x 64), never a raw rescan — the
-    TimescaleDB "approximate count distinct continuous aggregate"
-    feature, Spark-shaped.
+    every tier, where each coarser tier is built by MERGING the registers
+    of the tier just before it (groupBy + max), so 1d merges 1h, not 1m —
+    the sketch-cascade posture of `operators/sketch_rollup.py` applied to
+    cardinality. Raw data is touched exactly once (the caller produces
+    the finest-tier registers with `hll_partial` over `floor(ts /
+    finest)` windows); every coarser tier costs O(previous tier's
+    windows x 64), never a raw rescan — the TimescaleDB "approximate
+    count distinct continuous aggregate" feature, Spark-shaped.
+
+    The ladder must be a chain: each tier's width a whole multiple of
+    the PREVIOUS tier's, not just of the finest. A non-chain ladder such
+    as [1m, 2m, 3m] raises ValueError.
 
     Correctness is EXACT, not approximate, at the register level:
-    register max is associative and the tier grid is nested (each
-    coarser window is a whole number of finer windows), so cascaded
-    registers equal direct-from-raw registers bit-for-bit — pytest
-    asserts it and the driver oracle replays the 1h estimates from raw.
+    register max is associative and the chain is nested (each coarser
+    window is a whole number of windows of the tier before it), so
+    cascaded registers equal direct-from-raw registers bit-for-bit —
+    pytest asserts it and the driver oracle replays the 1h estimates
+    from raw.
 
     Input: a register table (key_cols..., window_ms_col, bucket, m)
     at tiers_sec[0] resolution. Output: (tier, keys..., window_start_ms,

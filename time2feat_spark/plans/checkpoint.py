@@ -29,11 +29,17 @@ class UnitRecord:
     unit: str  # partition unit key, e.g. "source=src_3"
     input_snapshot_id: str
     partition_range: str  # e.g. doc_id min..max processed in this unit
-    rollup_watermark: str  # high-water mark for incremental resume
+    # highest doc_id rolled up so far, in id order (length, then string);
+    # incremental runs process only ids past it
+    rollup_watermark: str
+    # ladder 'done' records: rows_in counts the increment this run wrote;
+    # windows_out, points and bytes_compressed are the unit's totals after
+    # the run (all its ladder runs), observed by the write job itself.
+    # Retention and compaction log their own records and leave these as is.
     rows_in: int
     windows_out: int
-    points: int
-    bytes_compressed: int
+    points: int  # sum(count) over every tier
+    bytes_compressed: int  # Gorilla ts + val block bytes
     wall_ms: int
     status: str = "done"
     ts: float = field(default_factory=time.time)
@@ -68,34 +74,25 @@ class Manifest:
                     out.append(UnitRecord(**json.loads(line)))
         return out
 
-    def done_units(self, input_snapshot: str) -> dict[str, UnitRecord]:
-        """Latest record per unit that is done AND matches the snapshot."""
+    def unit_state(self) -> tuple[dict[str, UnitRecord], dict[str, UnitRecord]]:
+        """One read of the manifest: (latest record per unit, latest
+        'done' record per unit). The latest record decides whether a unit
+        is done for a snapshot or dangling; the latest done record holds
+        the unit's watermark and the totals an incremental run adds to."""
         latest: dict[str, UnitRecord] = {}
+        done: dict[str, UnitRecord] = {}
         for r in self.records():
             latest[r.unit] = r
-        return {
-            u: r
-            for u, r in latest.items()
-            if r.status == "done" and r.input_snapshot_id == input_snapshot
-        }
-
-    def watermarks(self) -> dict[str, str]:
-        """Latest done watermark per unit regardless of snapshot (used by
-        incremental runs to process only rows past the mark)."""
-        out: dict[str, str] = {}
-        for r in self.records():
             if r.status == "done":
-                out[r.unit] = r.rollup_watermark
-        return out
+                done[r.unit] = r
+        return latest, done
 
     def dangling_units(self) -> set[str]:
         """Units whose LATEST record is 'started': a run crashed between
         the unit's data write and its 'done' record, so the unit's output
         directory may hold a partial (or duplicate-appended) increment.
         Resume must rebuild these units with a full overwrite."""
-        latest: dict[str, UnitRecord] = {}
-        for r in self.records():
-            latest[r.unit] = r
+        latest, _done = self.unit_state()
         return {u for u, r in latest.items() if r.status == "started"}
 
     def append(self, rec: UnitRecord) -> None:

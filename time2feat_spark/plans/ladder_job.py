@@ -18,8 +18,21 @@ and bounded-size files.
 Incremental mode realizes the continuous-aggregate semantics as
 restartable batch (SURVEY.md §2.9): sequences are append-only with
 monotonically increasing doc_id, so each unit's rollup watermark is its
-high-water doc_id; the next run processes only ``doc_id > watermark``
-and appends the new windows.
+high-water doc_id; the next run processes only ids past the watermark
+and appends the new windows. Ids are ordered by (length, string), so a
+decimal suffix may outgrow its zero padding: ``doc_100000000`` sorts
+after ``doc_99999999``.
+
+Each unit costs one Spark action, its write. The job observes its own
+counters on the way (``DataFrame.observe``): on the increment, its rows,
+high-water doc_id and points; on the output, windows, Gorilla bytes and
+points per tier. Every tier must hold exactly the increment's points,
+else the run raises before the unit's 'done' record lands. A 'done'
+record's ``rows_in`` is the increment it wrote; ``windows_out``,
+``points`` and ``bytes_compressed`` are the unit's totals after the
+run: an overwrite records what it wrote, an append adds what it wrote
+to the previous 'done' record. Retention and compaction keep their own
+manifest records and do not change these totals.
 """
 
 from __future__ import annotations
@@ -27,10 +40,21 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from ..operators.rollup import RollupConfig, assemble, rollup_sequences
 from .checkpoint import Manifest, UnitRecord, snapshot_id
+
+
+def _past(wm: str, widest: int) -> Column:
+    """doc_id after ``wm`` in id order: a longer id is later, ids of one
+    length compare as strings. ``widest`` is the unit's longest doc_id:
+    unless it exceeds ``wm``, the filter is ``doc_id > wm`` on ids of
+    wm's length, a conjunct parquet row-group statistics prune on, so an
+    append reads only the row groups that hold new ids."""
+    n = F.length("doc_id")
+    same = (n == len(wm)) & (F.col("doc_id") > wm)
+    return same | (n > len(wm)) if widest > len(wm) else same
 
 
 class LadderJob:
@@ -49,10 +73,15 @@ class LadderJob:
         self.rows_per_task = rows_per_task
         self.manifest = Manifest(out_root)
 
-    def _unit_stats(self, df: DataFrame) -> list[tuple[str, int]]:
-        """Pre-pass histogram: (source, rows) — drives units + salt size."""
-        rows = df.groupBy("source").count().collect()
-        return sorted((r["source"], r["count"]) for r in rows)
+    def _unit_stats(self, df: DataFrame) -> list[tuple[str, int, int]]:
+        """Pre-pass histogram: (source, rows, longest doc_id) — drives
+        units, salt size and the increment filter."""
+        rows = (
+            df.groupBy("source")
+            .agg(F.count(F.lit(1)).alias("n"), F.max(F.length("doc_id")).alias("w"))
+            .collect()
+        )
+        return sorted((r["source"], r["n"], r["w"]) for r in rows)
 
     def run(
         self,
@@ -73,29 +102,30 @@ class LadderJob:
         snap = snapshot_id(self.input_path)
         seq = self.spark.read.parquet(self.input_path)
         units = self._unit_stats(seq)
-        done = self.manifest.done_units(snap)
-        watermarks = self.manifest.watermarks() if incremental else {}
-        dangling = self.manifest.dangling_units()
+        latest, last_done = self.manifest.unit_state()
+        tiers = ["raw"] if self.cfg.include_raw else []
+        tiers += [t for t, _ in self.cfg.tiers]
 
         processed, skipped = [], []
-        for source, n_rows in units:
+        for source, n_rows, widest in units:
             unit = f"source={source}"
-            if unit in done:
+            cur = latest.get(unit)
+            if cur and cur.status == "done" and cur.input_snapshot_id == snap:
                 skipped.append(unit)
                 continue
             if max_units is not None and len(processed) >= max_units:
                 break
             t0 = time.time()
             part = seq.where(F.col("source") == source)
-            wm = watermarks.get(unit)
-            mode = "overwrite"
             # a dangling 'started' tombstone means a prior run died after
             # (possibly partially) appending this unit's increment — the
             # only safe resume is a full rebuild of the unit (idempotent
             # overwrite), never another append on top of unknown state
-            if incremental and wm is not None and unit not in dangling:
-                part = part.where(F.col("doc_id") > wm)
-                mode = "append"
+            dangling = cur is not None and cur.status == "started"
+            prev = last_done.get(unit) if incremental and not dangling else None
+            wm = prev.rollup_watermark if prev else ""
+            if prev:
+                part = part.where(_past(wm, widest))
             # record intent BEFORE mutating output: crash between the data
             # write and the 'done' record leaves this tombstone behind
             self.manifest.append(
@@ -104,14 +134,21 @@ class LadderJob:
                     unit=unit,
                     input_snapshot_id=snap,
                     partition_range=f"{source}",
-                    rollup_watermark=str(wm or ""),
-                    rows_in=n_rows,
+                    rollup_watermark=wm,
+                    rows_in=0,
                     windows_out=0,
                     points=0,
                     bytes_compressed=0,
                     wall_ms=0,
                     status="started",
                 )
+            )
+            seen_in, seen_out = Observation(), Observation()
+            part = part.observe(
+                seen_in,
+                F.count(F.lit(1)).alias("rows"),
+                F.max(F.struct(F.length("doc_id"), "doc_id")).alias("hi"),
+                F.sum("n_tok").alias("points"),
             )
             salt_k = max(1, -(-n_rows // self.rows_per_task))
             flat = rollup_sequences(
@@ -128,31 +165,48 @@ class LadderJob:
                     F.floor(F.unix_millis("window_start") / F.lit(86_400_000))
                     .cast("long"),
                 )
+                .observe(
+                    seen_out,
+                    F.count(F.lit(1)).alias("windows"),
+                    F.sum("count").alias("points"),
+                    F.sum(
+                        F.coalesce(F.length("val_gorilla"), F.lit(0))
+                        + F.coalesce(F.length("ts_gorilla"), F.lit(0))
+                    ).alias("bytes"),
+                    *[
+                        F.sum(F.when(F.col("tier") == t, F.col("count"))).alias(t)
+                        for t in tiers
+                    ],
+                )
             )
-            out.write.mode(mode).partitionBy("tier", "window_day").parquet(
-                f"{self.out_root}/source={source}"
+            out.write.mode("append" if prev else "overwrite").partitionBy(
+                "tier", "window_day"
+            ).parquet(f"{self.out_root}/source={source}")
+            # sums are null when the increment is empty
+            got_in, got_out = seen_in.get, seen_out.get
+            pts = got_in["points"] or 0
+            held = {t: got_out[t] or 0 for t in tiers}
+            if any(n != pts for n in held.values()):
+                # the 'started' tombstone stays: the next run rebuilds
+                raise RuntimeError(
+                    f"{unit}: tier points not conserved, the increment holds"
+                    f" {pts} points but tiers hold {held}"
+                )
+            # an append adds to the unit's totals, an overwrite restarts them
+            w0, p0, b0 = (
+                (prev.windows_out, prev.points, prev.bytes_compressed)
+                if prev else (0, 0, 0)
             )
-            stats = self.spark.read.parquet(
-                f"{self.out_root}/source={source}"
-            ).agg(
-                F.count(F.lit(1)).alias("w"),
-                F.sum("count").alias("p"),
-                F.sum(
-                    F.coalesce(F.length("val_gorilla"), F.lit(0))
-                    + F.coalesce(F.length("ts_gorilla"), F.lit(0))
-                ).alias("b"),
-            ).first()
-            hi = part.agg(F.max("doc_id")).first()[0] or wm or ""
             rec = UnitRecord(
                 run_id=run_id,
                 unit=unit,
                 input_snapshot_id=snap,
                 partition_range=f"{source}",
-                rollup_watermark=str(hi),
-                rows_in=n_rows,
-                windows_out=int(stats.w),
-                points=int(stats.p),
-                bytes_compressed=int(stats.b or 0),
+                rollup_watermark=got_in["hi"][1] if got_in["hi"] else wm,
+                rows_in=got_in["rows"],
+                windows_out=w0 + got_out["windows"],
+                points=p0 + (got_out["points"] or 0),
+                bytes_compressed=b0 + (got_out["bytes"] or 0),
                 wall_ms=int((time.time() - t0) * 1000),
             )
             self.manifest.append(rec)
@@ -177,9 +231,9 @@ class LadderJob:
                 )
                 compacted[source] = res
                 if res["rows"] is not None:  # an actual rewrite happened
-                    # unit key is namespaced so done_units()/watermarks()
-                    # (which key on the latest record per unit) never
-                    # mistake a compaction record for unit state
+                    # unit key is namespaced so unit_state() (which keys
+                    # on the latest record per unit) never mistakes a
+                    # compaction record for unit state
                     self.manifest.append(
                         UnitRecord(
                             run_id=run_id,
